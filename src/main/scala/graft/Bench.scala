@@ -457,7 +457,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
     sfDirG = sfDir
     // read the COMMITTED record's per-query costs BEFORE anything emits:
     // the fixture section's trailing emit() rewrites BENCH_LOCAL.json with

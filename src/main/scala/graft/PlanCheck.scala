@@ -21,20 +21,13 @@ object PlanCheck {
         org.apache.spark.sql.execution.FormattedMode))
     }
 
-    // 1) encode pipeline — DEFAULT path is PACKED since r8 (r7 verdict
-    // item 4): for_pack must sit BELOW the exchange, for_unpack above it,
-    // both native codegen (r6 verdict item 6)
+    // 1) encode pipeline: for_pack must sit BELOW the exchange, for_unpack
+    // above it, both native codegen (r6 verdict item 6)
     val input = TokenTables.fromLineitem(s, dir)
     val comp = TokenCompressor(EncodeOptions(numParts = 8))
     val plan = Planner.plan(input, EncodeOptions(numParts = 8))
-    show("encode (default = packShuffle ON)")(
+    show("encode (packed exchange)")(
       comp.encodeWithPlan(input, plan, None).toDF())
-
-    // 1b) unpacked variant (packShuffle=false, A/B comparison path)
-    val compNoPack = TokenCompressor(
-      EncodeOptions(numParts = 8, packShuffle = false))
-    show("encode packShuffle=false")(
-      compNoPack.encodeWithPlan(input, plan, None).toDF())
 
     // 2) lineage agg over written blocks (payload pruning)
     val tmp = java.nio.file.Files.createTempDirectory("plancheck").toString

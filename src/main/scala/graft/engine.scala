@@ -22,8 +22,7 @@ object Zframe {
   // the round-8 JFR profile. One reusable context per task thread (keyed by
   // level for the compressor) produces byte-identical frames — zstd-jni's
   // one-shots delegate to the same ZSTD_compress2 path with content size on
-  // (pinned byte-identical by EngineSpec). GRAFT_ZSTD_ONESHOT=1 is the A/B
-  // kill-switch back to the static calls (JVM-wide, read once).
+  // (pinned byte-identical by EngineSpec).
   // Lifetime note (ADVICE r8): these thread-locals (and DictCodec's one-slot
   // LUT cache) are BOUNDED per pool thread — one compress + one decompress
   // context (~KBs native) and at most one ≤4 MiB int[] — and deliberately
@@ -32,7 +31,6 @@ object Zframe {
   // zstd-jni's finalizers at thread death. The per-partition dict contexts
   // in BlockEncoder.TableCache ARE closed eagerly via task-completion
   // listeners (unbounded count per task, unlike these).
-  private val useOneShot: Boolean = sys.env.contains("GRAFT_ZSTD_ONESHOT")
   private val cctxCache =
     new ThreadLocal[(Int, com.github.luben.zstd.ZstdCompressCtx)]
   private val plainDctx =
@@ -58,9 +56,7 @@ object Zframe {
   /** Returns (framedOrPlain, outerName). Frames only when it shrinks. */
   def frame(bytes: Array[Byte], level: Int): (Array[Byte], String) = {
     if (level <= 0 || !available || bytes.length < 64) return (bytes, "none")
-    val z =
-      if (useOneShot) com.github.luben.zstd.Zstd.compress(bytes, level)
-      else cctxFor(level).compress(bytes)
+    val z = cctxFor(level).compress(bytes)
     if (z.length < bytes.length) (z, "zstd") else (bytes, "none")
   }
 
@@ -104,16 +100,28 @@ object Zframe {
   private val dctxCache =
     new ThreadLocal[(Array[Byte], com.github.luben.zstd.ZstdDecompressCtx)]
 
+  /** Largest content a frame may declare when the caller knows no tighter
+    * bound: the JVM's array-length limit.
+    */
+  val MaxContentBytes: Long = Int.MaxValue - 8
+
+  /** Undo [[frame]]/[[frameWith]]. The frame header's declared content
+    * size is checked against `maxBytes` BEFORE anything is allocated, so a
+    * forged or truncated header fails as an [[InvalidCodecException]]
+    * naming the outer frame — never an OOM, a size wrapped through
+    * `.toInt`, or a raw ZstdException.
+    */
   def unframe(bytes: Array[Byte], outer: String,
-              zdict: Array[Byte] = Array.emptyByteArray): Array[Byte] = outer match {
+              zdict: Array[Byte] = Array.emptyByteArray,
+              maxBytes: Long = MaxContentBytes): Array[Byte] = outer match {
     case "none" => bytes
     case "zstd" =>
-      val n = com.github.luben.zstd.Zstd.getFrameContentSize(bytes)
-      if (useOneShot) com.github.luben.zstd.Zstd.decompress(bytes, n.toInt)
-      else plainDctx.get().decompress(bytes, n.toInt)
+      val n = contentSize(bytes, outer, maxBytes)
+      decompressing(outer)(plainDctx.get().decompress(bytes, n))
     case "zstdd" =>
       require(zdict != null && zdict.nonEmpty,
         "outer frame 'zstdd' requires the block's zdict column")
+      val n = contentSize(bytes, outer, maxBytes)
       var e = dctxCache.get()
       if (e == null || !java.util.Arrays.equals(e._1, zdict)) {
         if (e != null) e._2.close() // native memory, not GC-visible
@@ -122,10 +130,24 @@ object Zframe {
         e = (zdict, ctx)
         dctxCache.set(e)
       }
-      val n = com.github.luben.zstd.Zstd.getFrameContentSize(bytes)
-      e._2.decompress(bytes, n.toInt)
+      decompressing(outer)(e._2.decompress(bytes, n))
     case other => throw new InvalidCodecException(s"unknown outer frame '$other'")
   }
+
+  private def contentSize(bytes: Array[Byte], outer: String, maxBytes: Long): Int = {
+    val n = com.github.luben.zstd.Zstd.getFrameContentSize(bytes) // < 0: unknown or malformed
+    val cap = math.min(maxBytes, MaxContentBytes)
+    if (n < 0 || n > cap)
+      throw new InvalidCodecException(
+        s"outer frame '$outer' declares content size $n, outside [0, $cap]")
+    n.toInt
+  }
+
+  private def decompressing[T](outer: String)(f: => T): T =
+    try f catch {
+      case e: com.github.luben.zstd.ZstdException =>
+        throw new InvalidCodecException(s"outer frame '$outer': ${e.getMessage}", e)
+    }
 }
 
 /** Sampled auto-enable probe for the shared zstd dictionary (zdictBlocks).
@@ -250,7 +272,7 @@ class TokenCompressor(val opts: EncodeOptions) extends Serializable {
   ): Dataset[EncodedBlock] = {
     val spark = ds.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.functions.{col, udf}
+    import org.apache.spark.sql.functions.col
     val o = opts
 
     // part_id as a NATIVE column expression over doc_id only (PartIdOf:
@@ -280,39 +302,29 @@ class TokenCompressor(val opts: EncodeOptions) extends Serializable {
     val slotOf = targetIds.zipWithIndex.toMap
     val keyOfPart: Array[Int] =
       Array.tabulate(plan.numParts)(p => slotOf.get(p).map(probes).getOrElse(0))
-    // DEFAULT-ON shuffle-byte reduction (r7 verdict item 4): FOR-pack each
-    // row's token array to binary on the map side (~2.5-3x fewer bytes
-    // than LE int32 before lz4 even sees them) via the codegen [[ForPack]]
-    // expression — the scan→route→pack map stage stays ONE WholeStageCodegen
-    // span (the former Scala UDF's converter barrier is what made this knob
-    // lose locally; verdict r6 item 6) — and unpack with [[ForUnpack]] after
-    // the exchange + sort, so the spillable shuffle/sort machinery only ever
-    // carries the packed bytes. The interleaved A/B
-    // (tools/ab_packshuffle_20260818.jsonl) has pack winning even through
-    // localhost (less ser/deser + transport-lz4 work); on a real cluster
-    // the exchange's wire bytes are the bottleneck it trades cheap CPU
-    // against. packShuffle=false keeps the unpacked exchange for A/Bs.
-    val keyed = filtered
+    // Shuffle-byte reduction: FOR-pack each row's token array to binary on
+    // the map side (~2.5-3x fewer bytes than LE int32 before lz4 even sees
+    // them) via the codegen [[ForPack]] expression — the scan→route→pack
+    // map stage stays ONE WholeStageCodegen span — and unpack with
+    // [[ForUnpack]] after the exchange + sort, so the spillable
+    // shuffle/sort machinery only ever carries the packed bytes. The
+    // interleaved A/B (tools/ab_packshuffle_20260818.jsonl) has pack
+    // winning even through localhost (less ser/deser + transport-lz4
+    // work); on a real cluster the exchange's wire bytes are the
+    // bottleneck it trades cheap CPU against.
+    val routed = filtered
       .withColumn("route_key",
         org.apache.spark.sql.functions.element_at(
           org.apache.spark.sql.functions.lit(keyOfPart), col("part_id") + 1))
-    val routedDf =
-      if (o.packShuffle)
-        keyed
-          .withColumn("packed",
-            GraftColumns.of(ForPack(GraftColumns.expr(col("tokens")))))
-          .select("part_id", "doc_id", "packed", "n_tok", "source", "route_key")
-          .repartition(targetIds.length, col("route_key"))
-          .sortWithinPartitions(col("part_id"), col("doc_id"))
-          .withColumn("tokens", GraftColumns.of(ForUnpack(
-            GraftColumns.expr(col("packed")), GraftColumns.expr(col("n_tok")))))
-          .select("part_id", "doc_id", "tokens", "n_tok", "source")
-      else
-        keyed
-          .repartition(targetIds.length, col("route_key"))
-          .sortWithinPartitions(col("part_id"), col("doc_id"))
-          .select("part_id", "doc_id", "tokens", "n_tok", "source")
-    val routed = routedDf.as[(Int, String, Array[Int], Int, String)]
+      .withColumn("packed",
+        GraftColumns.of(ForPack(GraftColumns.expr(col("tokens")))))
+      .select("part_id", "doc_id", "packed", "n_tok", "source", "route_key")
+      .repartition(targetIds.length, col("route_key"))
+      .sortWithinPartitions(col("part_id"), col("doc_id"))
+      .withColumn("tokens", GraftColumns.of(ForUnpack(
+        GraftColumns.expr(col("packed")), GraftColumns.expr(col("n_tok")))))
+      .select("part_id", "doc_id", "tokens", "n_tok", "source")
+      .as[(Int, String, Array[Int], Int, String)]
     routed.mapPartitions { it =>
       BlockEncoder.encodePartition(
         it.map(r => (r._1, TokenRow(r._2, r._3, r._4, r._5))), o)
@@ -356,6 +368,35 @@ object TokenCompressor {
   * types, so they unit-test without a session).
   */
 object BlockEncoder {
+
+  /** Upper bound on blocks encoded from one trained dict/fsst table before
+    * `tableReuse` retrains.
+    */
+  val RetrainEvery = 16
+
+  /** Target shared zstd dictionary size in bytes (`zdictBlocks` > 0),
+    * capped by sample mass in [[Zframe.trainDict]].
+    */
+  val ZdictBytes: Int = 1 << 16
+
+  /** Ceiling on the codec bytes any writer emits for a block of `n`
+    * tokens, so a frame header cannot make decode allocate more. The
+    * widest per-token layout is a self-contained dict (also fsst2's
+    * body): the table's delta varints take up to 5 B per distinct value
+    * (one per token at worst) and the codes up to 20 bits
+    * (MaxDict = 2^20), 7.5 B/token; rle's 5 B value + 1 B run, plain's 4,
+    * and for/delta/bitpack's 32-bit lanes are all narrower. fsst2's sync
+    * table adds 10 B per 4,096 tokens, inside the 0.5 B/token rounding
+    * to 8. The fixed part covers every varint and lane header plus
+    * fsst2's symbol table: at most 6 rounds x 96 pairs = 576 symbols of
+    * two 5-byte varints each, 5,760 B, under 64 KiB.
+    */
+  val MaxCodecBytesPerToken = 8L
+  val MaxCodecHeaderBytes: Long = 1L << 16
+
+  def maxCodecBytes(nTokens: Long): Long =
+    math.min(math.min(math.max(nTokens, 0L), Zframe.MaxContentBytes) *
+      MaxCodecBytesPerToken + MaxCodecHeaderBytes, Zframe.MaxContentBytes)
 
   /** Groups an iterator of (part_id, row), already sorted by (part_id,
     * doc_id), into blocks of ~opts.blockTokens tokens and encodes each.
@@ -457,7 +498,7 @@ object BlockEncoder {
       case tc: TableCodec if opts.tableReuse =>
         val reused =
           if (cache.codecName == tc.name && cache.table != null &&
-            cache.blocksSinceTrain < opts.retrainEvery)
+            cache.blocksSinceTrain < RetrainEvery)
             tryCached(tc, cache, flat, st)
           else None
         reused match {
@@ -485,7 +526,7 @@ object BlockEncoder {
             cache.zdSamples = scala.collection.mutable.ArrayBuffer.empty
           cache.zdSamples += codecBytes
           if (cache.zdSamples.length >= opts.zdictBlocks) {
-            cache.zdict = Zframe.trainDict(cache.zdSamples.toSeq, opts.zdictBytes)
+            cache.zdict = Zframe.trainDict(cache.zdSamples.toSeq, ZdictBytes)
             cache.zdSamples = null
             if (cache.zdict.nonEmpty) {
               cache.zcctx = new com.github.luben.zstd.ZstdCompressCtx()
@@ -589,7 +630,7 @@ object BlockEncoder {
     var tokUntil = tokFrom
     while (i < end) { tokUntil += b.n_toks(i); i += 1 }
 
-    val codecBytes = Zframe.unframe(b.payload, b.outer, b.zdict)
+    val codecBytes = Zframe.unframe(b.payload, b.outer, b.zdict, maxCodecBytes(b.n_tokens))
     val codec = CodecRegistry.byName(b.codec)
     val nAll = b.n_tokens.toInt
     // extend the slice to digest-interval boundaries so every returned
@@ -642,7 +683,7 @@ object BlockEncoder {
   }
 
   def decodeBlock(b: EncodedBlock, verify: Boolean): Iterator[TokenRow] = {
-    val codecBytes = Zframe.unframe(b.payload, b.outer, b.zdict)
+    val codecBytes = Zframe.unframe(b.payload, b.outer, b.zdict, maxCodecBytes(b.n_tokens))
     val flat =
       if (b.symtab != null && b.symtab.nonEmpty)
         CodecRegistry.byName(b.codec) match {

@@ -303,12 +303,12 @@ object PackKernels {
       .fromPrimitiveArray(ForCodec.decode(b, n))
 }
 
-/** Map-side FOR-pack of a row's token array for the range exchange
-  * (EncodeOptions.packShuffle): ~2.5-3x fewer shuffle bytes before
-  * transport compression. Replaces the former Scala UDF (verdict r6 item
-  * 6), whose per-row catalyst→scala converter forced early Tungsten
-  * deserialization and broke the scan→route→pack codegen span — that CPU
-  * tax is what made the knob lose locally (74→61 MTok/s at 8 cores).
+/** Map-side FOR-pack of a row's token array for the encode path's range
+  * exchange: ~2.5-3x fewer shuffle bytes before transport compression.
+  * Replaces the former Scala UDF (verdict r6 item 6), whose per-row
+  * catalyst→scala converter forced early Tungsten deserialization and
+  * broke the scan→route→pack codegen span — that CPU tax is what made
+  * packing lose locally (74→61 MTok/s at 8 cores).
   * This is one generated-code kernel call; the map stage stays a single
   * WholeStageCodegen span (pinned by PlanShapeSpec).
   */

@@ -82,25 +82,7 @@ final case class EncodedBlock(
   *                     column bytes -> Parquet stores the table once per
   *                     row group; fsst skips its training rounds). Reuse is
   *                     quality-guarded and retrained at least every
-  *                     `retrainEvery` blocks
-  * @param retrainEvery upper bound on blocks encoded from one trained table
-  * @param packShuffle  FOR-pack each row's token array to binary before the
-  *                     range exchange (~2.5-3x fewer shuffle bytes before
-  *                     transport compression); rows stay rows so the
-  *                     spillable shuffle/sort path is unchanged. Pack and
-  *                     unpack are codegen expressions ([[ForPack]] /
-  *                     [[ForUnpack]]) — the former Scala UDF's converter
-  *                     barrier cost 74->61 MTok/s at 8 cores locally
-  *                     (verdict r6 item 6). Default ON (r7 verdict item 4):
-  *                     with the codegen kernels the knob WINS even on a
-  *                     no-network box — the 6-round interleaved A/B
-  *                     (tools/ab_packshuffle_20260818.jsonl) has pack
-  *                     decisively faster on both encode and decode legs
-  *                     (fewer serialized exchange bytes = less ser/deser +
-  *                     lz4 work even through localhost) — and it is designed
-  *                     to win harder on clusters where the wire, not the
-  *                     CPU, is the shuffle bottleneck. Set false to A/B the
-  *                     unpacked exchange (numbers in BENCH.md)
+  *                     [[BlockEncoder.RetrainEvery]] blocks
   * @param zdictBlocks  >0 trains one shared zstd dictionary per partition
   *                     over the codec bytes of its first `zdictBlocks`
   *                     blocks, then frames subsequent blocks with it when
@@ -111,8 +93,8 @@ final case class EncodedBlock(
   *                     block count — the knob is for ratio-oriented tables
   *                     (thousands of blocks/partition at production scale);
   *                     default OFF to keep the latency-oriented encode path
-  *                     free of the training stall
-  * @param zdictBytes   target dictionary size in bytes (capped by sample mass)
+  *                     free of the training stall. The dictionary targets
+  *                     [[BlockEncoder.ZdictBytes]] bytes
   * @param zdictAuto    when true (and zdictBlocks == 0), [[ResumableEncodeJob]]
   *                     probes a deterministic sample at table creation with
   *                     the REAL block encoder ([[ZdictProbe]]) and enables
@@ -128,10 +110,7 @@ final case class EncodeOptions(
     sampleMod: Int = 0,
     strictSizeBound: Boolean = false,
     tableReuse: Boolean = true,
-    retrainEvery: Int = 16,
-    packShuffle: Boolean = true,
     zdictBlocks: Int = 0,
-    zdictBytes: Int = 1 << 16,
     zdictAuto: Boolean = false
 ) extends Serializable
 
@@ -155,5 +134,5 @@ final case class BlockStats(
     maxDeltaZz: Long = 0L // max zigzag(t[i]-t[i-1]), unsigned 32-bit (Delta cue)
 )
 
-final class InvalidCodecException(msg: String)
-    extends IllegalArgumentException(msg)
+final class InvalidCodecException(msg: String, cause: Throwable = null)
+    extends IllegalArgumentException(msg, cause)

@@ -207,19 +207,13 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("packShuffle mode round-trips bit-identically (network-bound-cluster knob)") {
-    import org.apache.spark.sql.Encoders
+    // the encode exchange always carries FOR-packed rows; the pack/unpack
+    // identity itself is pinned per row shape in PackShuffleSpec
     val input = Fixtures.tokenTable(spark, 500L)
-    val opts = EncodeOptions(numParts = 4, blockTokens = 1 << 13, packShuffle = true)
-    val comp = TokenCompressor(opts)
+    val comp = TokenCompressor(EncodeOptions(numParts = 4, blockTokens = 1 << 13))
     val back = comp.decode(comp.encode(input))
       .collect().map(r => r.doc_id -> r.tokens.toSeq).toMap
     assert(back == input.collect().map(r => r.doc_id -> r.tokens.toSeq).toMap)
-    // packed and unpacked paths produce identical block payloads (same
-    // routing, same sort, same codec decisions)
-    val a = comp.encode(input).collect().map(b => (b.part_id, b.block_id, b.checksum)).toSet
-    val b = TokenCompressor(opts.copy(packShuffle = false)).encode(input)
-      .collect().map(b => (b.part_id, b.block_id, b.checksum)).toSet
-    assert(a == b)
   }
 
   test("null doc_id fails FAST at the routing expression, not in row decode") {

@@ -96,8 +96,8 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("DEFAULT encode pipeline: one exchange, identity routing, PACKED (r7 item 4)") {
     val ds = Fixtures.tokenTable(spark, 400L)
-    // DEFAULT options: since r8 the default path is the packed pipeline
-    // (packShuffle won its interleaved A/B, tools/ab_packshuffle_20260818)
+    // the encode path always packs its exchange (packing won its
+    // interleaved A/B, tools/ab_packshuffle_20260818)
     val opts = EncodeOptions(numParts = 4, blockTokens = 1 << 12)
     val plan = Planner.plan(ds, opts)
     val p = planOf(TokenCompressor(opts).encodeWithPlan(ds, plan, None).toDF())
@@ -119,20 +119,6 @@ class PlanShapeSpec extends AnyFunSuite {
       s"default path must pack the exchange (r7 verdict item 4):\n$p")
     assert(iUnpack < iEx && iEx < iPack,
       s"pack must run map-side and unpack reduce-side:\n$p")
-  }
-
-  test("packShuffle=false variant: unpacked exchange, still one exchange, UDF-free") {
-    val ds = Fixtures.tokenTable(spark, 400L)
-    val opts = EncodeOptions(numParts = 4, blockTokens = 1 << 12,
-      packShuffle = false)
-    val plan = Planner.plan(ds, opts)
-    val p = planOf(TokenCompressor(opts).encodeWithPlan(ds, plan, None).toDF())
-    assert("Exchange".r.findAllIn(p).length == 1, p)
-    assert(!p.contains("for_pack") && !p.contains("for_unpack"),
-      s"unpacked variant must not pack:\n$p")
-    assert(p.contains("part_id_of"), s"native PartIdOf missing:\n$p")
-    assert(!p.toLowerCase.contains("scalaudf") && !p.contains("UDF("),
-      s"Scala UDF reappeared in the unpacked encode path:\n$p")
   }
 
   test("incrementalPairs: committed sigs scanned once in place, cand side broadcast") {

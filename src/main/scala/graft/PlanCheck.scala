@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Encoders, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 
 /** Prints formatted physical plans for the load-bearing pipelines so plan
   * shape (pushdown, pruning, broadcast, codegen spans) can be audited.
@@ -28,14 +27,6 @@ object PlanCheck {
     val plan = Planner.plan(input, EncodeOptions(numParts = 8))
     show("encode (packed exchange)")(
       comp.encodeWithPlan(input, plan, None).toDF())
-
-    // 2) lineage agg over written blocks (payload pruning)
-    val tmp = java.nio.file.Files.createTempDirectory("plancheck").toString
-    comp.encodeWithPlan(input, plan, None).toDF().write
-      .mode("overwrite").partitionBy("part_id").parquet(s"$tmp/data")
-    show("lineage-agg (payload must be pruned)")(
-      s.read.parquet(s"$tmp/data").where(col("part_id").isin(0, 1))
-        .groupBy("part_id").agg(sum("n_tokens"), sum("encoded_bytes")))
 
     // 3) digest roundtrip query
     show("digest")(TokenTables.roundTripDigest(s, dir, "auto"))

@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Observation, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
@@ -24,7 +26,86 @@ final case class PartLineage(
     checksum_xor: Long,
     codecs: Map[String, Long],
     wall_micros: Long
+) {
+  /** This lineage with `o` folded in, keeping this `part_id`: counts, sizes
+    * and micros add, checksums xor, codec block counts add per codec.
+    */
+  def +(o: PartLineage): PartLineage = PartLineage(part_id,
+    n_blocks + o.n_blocks, n_docs + o.n_docs, n_tokens + o.n_tokens,
+    raw_bytes + o.raw_bytes, encoded_bytes + o.encoded_bytes,
+    checksum_xor ^ o.checksum_xor,
+    o.codecs.foldLeft(codecs) { case (m, (c, n)) => m.updated(c, m.getOrElse(c, 0L) + n) },
+    wall_micros + o.wall_micros)
+}
+
+object PartLineage {
+  def empty(part: Int): PartLineage = PartLineage(part, 0, 0, 0, 0, 0, 0, Map.empty, 0)
+}
+
+/** What lineage reads of one block: [[EncodedBlock]]'s metadata columns,
+  * never its payload, doc ids or tables.
+  */
+final case class BlockMeta(
+    part_id: Int,
+    block_id: Long,
+    codec: String,
+    n_docs: Int,
+    n_tokens: Long,
+    raw_bytes: Long,
+    encoded_bytes: Long,
+    enc_micros: Long,
+    checksum: Long
 )
+
+/** Per-part lineage observed on the commit's own parquet write, so every
+  * commit path encodes and writes in one pass with no cache of the encoded
+  * payload and no second job over it.
+  *
+  * Exact, not approximate: the buffer holds one [[PartLineage]] per part of
+  * the batch, however many blocks there are. The observation sits above
+  * the route exchange, so its accumulator runs in the write's result stage,
+  * and Spark applies a result task's accumulator updates once per
+  * partition: a retried or speculative task cannot count a block twice.
+  * `wall_micros` is therefore the sum of the `enc_micros` the files hold.
+  * (SQL metrics, which are updated on every attempt, would not be exact.)
+  * A block with a null codec fails the commit with an
+  * [[InvalidCodecException]] naming the part and block.
+  */
+object LineageAgg extends Aggregator[BlockMeta, Map[Int, PartLineage], Map[Int, PartLineage]] {
+  def zero: Map[Int, PartLineage] = Map.empty
+
+  def reduce(b: Map[Int, PartLineage], m: BlockMeta): Map[Int, PartLineage] = {
+    if (m.codec == null)
+      throw new InvalidCodecException(
+        s"part ${m.part_id} block ${m.block_id}: null codec in encoded block")
+    val one = PartLineage(m.part_id, 1, m.n_docs, m.n_tokens, m.raw_bytes,
+      m.encoded_bytes, m.checksum, Map(m.codec -> 1L), m.enc_micros)
+    b.updated(m.part_id, b.get(m.part_id).fold(one)(_ + one))
+  }
+
+  def merge(a: Map[Int, PartLineage], b: Map[Int, PartLineage]): Map[Int, PartLineage] =
+    b.foldLeft(a) { case (acc, (k, l)) => acc.updated(k, acc.get(k).fold(l)(_ + l)) }
+
+  def finish(b: Map[Int, PartLineage]): Map[Int, PartLineage] = b
+  def bufferEncoder: Encoder[Map[Int, PartLineage]] = ExpressionEncoder()
+  def outputEncoder: Encoder[Map[Int, PartLineage]] = ExpressionEncoder()
+
+  /** Runs `write` over `blocks` with the aggregator observed and returns
+    * the lineage of exactly the blocks it wrote.
+    */
+  def observeWrite(blocks: DataFrame)(write: DataFrame => Unit): Map[Int, PartLineage] = {
+    val meta = Encoders.product[BlockMeta]
+    val obs = Observation()
+    write(blocks.observe(obs,
+      udaf(this, meta)(meta.schema.fieldNames.toIndexedSeq.map(col): _*).as("lineage")))
+    obs.get("lineage").asInstanceOf[scala.collection.Map[Int, Row]].iterator
+      .map { case (k, r) =>
+        k -> PartLineage(r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3),
+          r.getLong(4), r.getLong(5), r.getLong(6),
+          r.getMap[String, Long](7).toMap, r.getLong(8))
+      }.toMap
+  }
+}
 
 /** One committed snapshot of the encoded table. `streamBatchId` is the
   * highest streaming micro-batch folded in (None for pure-batch tables);
@@ -271,10 +352,15 @@ object ManifestIO {
   * An interrupted `spark-submit` rerun therefore continues from the last
   * committed snapshot (north_rule), re-encoding at most one in-flight batch
   * whose stale files are cleaned deterministically before re-write.
+  * Each batch's lineage is observed on its parquet write ([[LineageAgg]]).
   */
 object ResumableEncodeJob {
 
-  /** @param maxPartsPerRun bound on partitions encoded by this invocation
+  /** Encode the next batch of pending parts and commit it. The batch's
+    * encode, parquet write and lineage are one pass: lineage is observed
+    * on the write, never read back or aggregated again.
+    *
+    * @param maxPartsPerRun bound on partitions encoded by this invocation
     *                       (tests use it to simulate interruption)
     * @return the latest snapshot after this run
     */
@@ -321,20 +407,15 @@ object ResumableEncodeJob {
       if (f.exists(d)) f.delete(d, true)
     }
 
-    // one encode pass feeds BOTH the parquet write and the lineage
-    // aggregation (r9 — same law appendBatch already applied): the former
-    // read-back of the just-written files cost an extra listing + scan per
-    // run, and the persisted blocks provably describe what was encoded
-    val blocks = compressor.encodeWithPlan(input, plan, Some(batch)).toDF()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val lineage =
-      try {
-        blocks.write
-          .mode(SaveMode.Append)
-          .partitionBy("part_id")
-          .parquet(ManifestIO.dataDir(table).toString)
-        lineageOf(blocks)
-      } finally { blocks.unpersist(); () }
+    // the write observes the lineage itself (LineageAgg): one pass over
+    // the encoded blocks, nothing cached and no second job
+    val lineage = LineageAgg.observeWrite(
+      compressor.encodeWithPlan(input, plan, Some(batch)).toDF()) {
+      _.write
+        .mode(SaveMode.Append)
+        .partitionBy("part_id")
+        .parquet(ManifestIO.dataDir(table).toString)
+    }
 
     // parts in the batch with zero rows still count as committed
     val next = Snapshot(
@@ -349,70 +430,13 @@ object ResumableEncodeJob {
     next
   }
 
-  /** Lineage from the committed files themselves, in ONE job: a two-level
-    * aggregation ((part_id, codec) partials, then per-part rollup with the
-    * codec map + xor-of-checksums via the bit_xor aggregate — no
-    * collect_list of checksums ever materializes) and a single collect of
-    * one small row per part. The read is column-pruned (payload never
-    * touched) and schema-explicit so a zero-block batch (only _SUCCESS on
-    * disk) yields empty lineage instead of a schema-inference failure.
-    */
-  private def lineageFor(spark: SparkSession, table: String,
-                         batch: Set[Int]): Map[Int, PartLineage] = {
-    import org.apache.spark.sql.Encoders
-    val written = spark.read
-      .schema(Encoders.product[EncodedBlock].schema)
-      .parquet(ManifestIO.dataDir(table).toString)
-      .where(col("part_id").isin(batch.toSeq: _*))
-    lineageOf(written)
-  }
-
-  /** The lineage aggregation alone, over any block DataFrame (the written
-    * files or the persisted encode output — identical rows either way).
-    */
-  private def lineageOf(written: org.apache.spark.sql.DataFrame): Map[Int, PartLineage] = {
-    written
-      .groupBy("part_id", "codec")
-      .agg(
-        count(lit(1)).as("n_blocks"),
-        sum("n_docs").as("n_docs"),
-        sum("n_tokens").as("n_tokens"),
-        sum("raw_bytes").as("raw_bytes"),
-        sum("encoded_bytes").as("encoded_bytes"),
-        sum("enc_micros").as("wall_micros"),
-        expr("bit_xor(checksum)").as("ckx"))
-      .groupBy("part_id")
-      .agg(
-        sum("n_blocks").as("n_blocks"),
-        sum("n_docs").as("n_docs"),
-        sum("n_tokens").as("n_tokens"),
-        sum("raw_bytes").as("raw_bytes"),
-        sum("encoded_bytes").as("encoded_bytes"),
-        sum("wall_micros").as("wall_micros"),
-        expr("bit_xor(ckx)").as("checksum_xor"),
-        map_from_entries(collect_list(struct(col("codec"), col("n_blocks"))))
-          .as("codecs"))
-      .collect().map { r =>
-        r.getAs[Int]("part_id") -> PartLineage(
-          r.getAs[Int]("part_id"),
-          r.getAs[Long]("n_blocks"),
-          r.getAs[Long]("n_docs"),
-          r.getAs[Long]("n_tokens"),
-          r.getAs[Long]("raw_bytes"),
-          r.getAs[Long]("encoded_bytes"),
-          r.getAs[Long]("checksum_xor"),
-          r.getAs[Map[String, Long]]("codecs"),
-          r.getAs[Long]("wall_micros")
-        )
-      }.toMap
-  }
-
   /** Resumable table-level codec-policy migration: re-encode SRC's
     * committed parts into DST under `opts`, part-batched with the same
     * commit/cleanup discipline as [[run]]. The per-part work is the NARROW
     * [[TokenCompressor.recompress]] path — raw tokens never shuffle, DST
     * inherits SRC's partition plan, and an interrupted migration resumes
     * from its last committed snapshot exactly like an interrupted encode.
+    * As in [[run]], lineage is observed on the write.
     */
   def migrate(
       spark: SparkSession,
@@ -443,17 +467,14 @@ object ResumableEncodeJob {
 
     val srcBlocks = readBlocks(spark, srcTable)
       .where(col("part_id").isin(batch.toSeq: _*))
-      .as[EncodedBlock](org.apache.spark.sql.Encoders.product[EncodedBlock])
-    // one recompress pass feeds the write AND the lineage agg (see run())
-    val out = TokenCompressor(opts).recompress(srcBlocks).toDF()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val lineage =
-      try {
-        out.write.mode(SaveMode.Append)
-          .partitionBy("part_id")
-          .parquet(ManifestIO.dataDir(dstTable).toString)
-        lineageOf(out)
-      } finally { out.unpersist(); () }
+      .as[EncodedBlock](Encoders.product[EncodedBlock])
+    // lineage observed on the write, as in run()
+    val lineage = LineageAgg.observeWrite(
+      TokenCompressor(opts).recompress(srcBlocks).toDF()) {
+      _.write.mode(SaveMode.Append)
+        .partitionBy("part_id")
+        .parquet(ManifestIO.dataDir(dstTable).toString)
+    }
 
     val next = Snapshot(
       base.version + 1,
@@ -474,7 +495,6 @@ object ResumableEncodeJob {
     */
   def readBlocks(spark: SparkSession, table: String,
                  asOfVersion: Option[Int] = None): Dataset[EncodedBlock] = {
-    import org.apache.spark.sql.Encoders
     val snap = asOfVersion
       .map(v => ManifestIO.at(spark, table, v)
         .getOrElse(throw new IllegalStateException(s"no snapshot v$v in $table")))

@@ -23,7 +23,8 @@ object StreamingEncode {
 
   /** Append one micro-batch of token rows as encoded blocks. Blocks are
     * routed with the table's persistent partition plan (from snapshot v0)
-    * so stream and batch writes cluster identically.
+    * so stream and batch writes cluster identically. The batch's lineage is
+    * observed on its write ([[LineageAgg]]) and folded into part -1.
     */
   def appendBatch(
       batch: Dataset[TokenRow],
@@ -39,59 +40,22 @@ object StreamingEncode {
       s0
     }
     if (base.streamBatchId.exists(_ >= batchId)) return // replayed batch
-    val comp = TokenCompressor(opts)
-    // one encode pass feeds BOTH the parquet write and the lineage metrics
-    // (persist instead of re-reading the batch directory back: one fewer
-    // job per micro-batch, and the metrics provably describe what was
-    // encoded, not what a concurrent reader sees on disk)
-    val blocks = comp.encodeWithPlan(batch, base.plan, None).toDF()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // batch-scoped directory: deterministic overwrite on retry
-      val dir = s"$table/stream_batches/batch=$batchId"
-      blocks.write.mode(SaveMode.Overwrite).parquet(dir)
-      // ONE aggregation job serves both the lineage totals and the
-      // per-codec counts (r9: the totals agg and the codec groupBy were
-      // two separate jobs over the persisted blocks; grouped partials sum
-      // and xor-fold driver-side to the identical totals). An empty
-      // micro-batch (replay after checkpoint recovery) collects zero
-      // groups and every total stays 0.
-      val perCodec = blocks.groupBy("codec").agg(
-        count(lit(1)).as("blocks"), sum("n_docs").as("docs"),
-        sum("n_tokens").as("toks"), sum("raw_bytes").as("raw"),
-        sum("encoded_bytes").as("enc"),
-        expr("bit_xor(checksum)").as("ckx"),
-        sum("enc_micros").as("micros")).collect()
-      val newCodecs = perCodec.iterator
-        .map(r => r.getAs[String]("codec") -> r.getAs[Long]("blocks")).toMap
-      def ln(name: String): Long =
-        if (name == "ckx") perCodec.foldLeft(0L)(_ ^ _.getAs[Long]("ckx"))
-        else perCodec.iterator.map(_.getAs[Long](name)).sum
-      // stream lineage carries the SAME fields as batch parts (round-2
-      // verdict item 6): xor-of-checksums folds associatively across
-      // batches, codec counts merge by sum, wall_micros accumulates the
-      // per-block encode time like ManifestIO.lineageFor
-      val lineage = base.lineage.updated(-1,
-        base.lineage.get(-1).map { l =>
-          l.copy(
-            n_blocks = l.n_blocks + ln("blocks"),
-            n_docs = l.n_docs + ln("docs"),
-            n_tokens = l.n_tokens + ln("toks"),
-            raw_bytes = l.raw_bytes + ln("raw"),
-            encoded_bytes = l.encoded_bytes + ln("enc"),
-            checksum_xor = l.checksum_xor ^ ln("ckx"),
-            codecs = (l.codecs.keySet ++ newCodecs.keySet).map(k =>
-              k -> (l.codecs.getOrElse(k, 0L) + newCodecs.getOrElse(k, 0L))).toMap,
-            wall_micros = l.wall_micros + ln("micros"))
-        }.getOrElse(PartLineage(-1, ln("blocks"), ln("docs"),
-          ln("toks"), ln("raw"), ln("enc"),
-          ln("ckx"), newCodecs, ln("micros"))))
-      ManifestIO.write(spark, table,
-        base.copy(version = base.version + 1,
-          committedAtMillis = System.currentTimeMillis(),
-          lineage = lineage,
-          streamBatchId = Some(batchId)))
-    } finally blocks.unpersist()
+    // batch-scoped directory: deterministic overwrite on retry
+    val dir = s"$table/stream_batches/batch=$batchId"
+    val parts = LineageAgg.observeWrite(
+      TokenCompressor(opts).encodeWithPlan(batch, base.plan, None).toDF()) {
+      _.write.mode(SaveMode.Overwrite).parquet(dir)
+    }
+    // stream lineage carries the same fields as batch parts, folded into
+    // part -1 across batches; an empty micro-batch (replay after checkpoint
+    // recovery) observes no parts and leaves the totals as they were
+    val total = parts.values.foldLeft(
+      base.lineage.getOrElse(-1, PartLineage.empty(-1)))(_ + _)
+    ManifestIO.write(spark, table,
+      base.copy(version = base.version + 1,
+        committedAtMillis = System.currentTimeMillis(),
+        lineage = base.lineage.updated(-1, total),
+        streamBatchId = Some(batchId)))
   }
 
   /** Start the ingestion stream over a directory of token parquet files. */
